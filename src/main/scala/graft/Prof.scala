@@ -12,10 +12,18 @@ import org.apache.spark.scheduler._
   * {{{ sbt "runMain graft.Prof text_bm25_maxscore /root/testdata/sf0.1" }}}
   */
 object Prof {
+  /** Several keys in one JVM: an argument naming an existing
+    * directory (absolute or relative) is an SF dir, every other
+    * argument must be a `SparkEntry.queries` key. */
+  private[graft] def parseArgs(args: Seq[String]): (Seq[String], Seq[String]) = {
+    val (dirs, keys) = args.partition(a => new java.io.File(a).isDirectory)
+    val unknown = keys.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown keys (or missing SF dir): ${unknown.mkString(", ")}")
+    (dirs, keys)
+  }
+
   def main(args: Array[String]): Unit = {
-    // several keys in one JVM: last arg that looks like a path is the
-    // SF dir, everything else is a key list
-    val (dirs, keys0) = args.partition(_.startsWith("/"))
+    val (dirs, keys0) = parseArgs(args.toSeq)
     val keys = if (keys0.nonEmpty) keys0.toSeq else Seq("text_bm25_maxscore")
     val sfDir = dirs.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = SparkSession.builder().master("local[32]")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -65,15 +65,39 @@ object RetailEtl {
       col("sale_amount").cast(DoubleType).as("sale_amount"),
       to_date(col("sale_date"), "yyyy-MM-dd").as("sale_date"))
 
+  /** The engine's one column-name resolution rule: `wanted` against
+    * `names`, the exact name first, else (unless `caseSensitive`) the
+    * unique name equal to it ignoring case. None when absent; two
+    * case-variant matches throw. */
+  private[graft] def resolveName(names: Seq[String], wanted: String,
+                                 caseSensitive: Boolean = false): Option[String] =
+    names.find(_ == wanted).orElse {
+      val ci = if (caseSensitive) Nil else names.filter(_.equalsIgnoreCase(wanted))
+      require(ci.size <= 1,
+        s"column '$wanted' is ambiguous case-insensitively: ${ci.mkString(", ")}")
+      ci.headOption
+    }
+
+  /** `spark.sql.caseSensitive` of the session — how it resolves columns. */
+  private[graft] def caseSensitive(spark: SparkSession): Boolean =
+    spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
+
   /** Schema validation (extraction.py:70-96): fails fast at plan time
-    * when required columns are missing. The reference also raises on
-    * an empty frame — an action-forcing check; callers that need it
-    * use [[requireNonEmpty]] so the common path stays lazy.
+    * when required columns are missing. Names resolve like the
+    * session resolves columns (a JDBC source may report `SALE_ID` for
+    * the reference's `sale_id`), and the frame comes back with the
+    * required columns under their canonical names — the input itself
+    * when they already match. The reference also raises on an empty
+    * frame — an action-forcing check; callers that need it use
+    * [[requireNonEmpty]] so the common path stays lazy.
     */
   def validateColumns(df: DataFrame, required: Seq[String] = RequiredColumns): DataFrame = {
-    val missing = required.filterNot(df.columns.contains)
+    val cs = caseSensitive(df.sparkSession)
+    val found = required.map(r => r -> resolveName(df.columns.toSeq, r, cs))
+    val missing = found.collect { case (r, None) => r }
     require(missing.isEmpty, s"Missing required columns: ${missing.mkString(", ")}")
-    df
+    val renames = found.collect { case (r, Some(c)) if c != r => c -> r }.toMap
+    if (renames.isEmpty) df else df.withColumnsRenamed(renames)
   }
 
   def requireNonEmpty(df: DataFrame): DataFrame = {
@@ -152,9 +176,8 @@ object RetailEtl {
     * fails the job exactly like the reference's ValueError — but
     * distributed, without collecting the summary to the driver.
     */
-  def validateSummary(df: DataFrame): DataFrame = {
-    validateColumns(df, Seq("product_id", "total_quantity", "total_sale_amount"))
-    df.select(
+  def validateSummary(df: DataFrame): DataFrame =
+    validateColumns(df, Seq("product_id", "total_quantity", "total_sale_amount")).select(
       col("product_id"),
       when(col("total_quantity") < 0,
         raise_error(concat(lit("Found negative quantities: product "), col("product_id"))))
@@ -162,7 +185,6 @@ object RetailEtl {
       when(col("total_sale_amount") < 0,
         raise_error(concat(lit("Found negative sale amounts: product "), col("product_id"))))
         .otherwise(col("total_sale_amount")).as("total_sale_amount"))
-  }
 
   /** End-to-end pipeline on already-typed sources: the reference DAG's
     * transform stage (extract output → summary).
@@ -173,10 +195,26 @@ object RetailEtl {
     * engine doesn't replay in the hot path: columns stay typed from
     * scan to sink. `asTransportStrings`/`convertTyped` remain
     * available for actual wire-format boundaries.
+    *
+    * The transform→load boundary is a materialization point, as in
+    * the reference DAG (transformation.py:95-121 hands ONE summary to
+    * loading.py:124-161): the validated summary is computed here, once,
+    * and returned as an eager `localCheckpoint`, so a negative total
+    * fails here, not at a sink. Every sink and later action reads the
+    * same blocks: the extract, the clean and the aggregate run once per
+    * batch rather than once per sink, and the CSV artifact and the JDBC
+    * table come from one snapshot of the sources. The checkpoint holds
+    * at most one row per distinct `product_id`, never the fact. Not
+    * `cache()`: the CacheManager matches by plan equality, so a later
+    * batch over the same source options would read this batch's
+    * summary, and nothing would ever unpersist it. A local checkpoint
+    * is keyed by RDD identity; its blocks are released through the
+    * ContextCleaner once the frame is dropped.
     */
   def pipeline(online: DataFrame, inStore: DataFrame): DataFrame =
     validateSummary(aggregate(clean(
       combine(validateColumns(online), validateColumns(inStore)))))
+      .localCheckpoint(eager = true)
 
   /** Idempotent sink, mirroring the truncate+replace MySQL load and
     * the always-overwritten CSV (loading.py:124-161): a full
@@ -317,23 +355,16 @@ object RetailEtl {
     * matches the NATIVE distinct both engines compute (-0.0 and 0.0
     * compare equal natively but stringify differently; NaN needs no
     * help — every rendering casts to "NaN"). */
-  /** The dq family's ONE column-resolution rule (r18, ADVICE —
-    * previously only the stringified path had it, so case-variant
-    * callers got differing `col_name` rows from the composed and
-    * one-scan twins): exact schema name first, else a UNIQUE
-    * case-insensitive match; absence and ambiguity throw naming the
-    * caller's spelling; the RESOLVED schema field is what every
-    * emitter uses, so `col_name` output is caller-case-independent. */
+  /** The dq family's column resolution, shared by the composed and
+    * one-scan twins so case-variant callers get identical `col_name`
+    * rows from both: [[resolveName]], case-insensitive whatever the
+    * session says; absence and ambiguity throw naming the caller's
+    * spelling; the RESOLVED schema field is what every emitter uses,
+    * so `col_name` output is caller-case-independent. */
   private def resolveDqColumn(df: DataFrame,
                               c: String): org.apache.spark.sql.types.StructField = {
-    val field = df.schema.fields.find(_.name == c).getOrElse {
-      val ci = df.schema.fields.filter(_.name.equalsIgnoreCase(c))
-      require(ci.nonEmpty, s"dq profile column '$c' does not exist")
-      require(ci.length == 1,
-        s"dq profile column '$c' is ambiguous case-insensitively: " +
-          ci.map(_.name).mkString(", "))
-      ci.head
-    }
+    val field = df.schema(resolveName(df.columns.toSeq, c).getOrElse(
+      throw new IllegalArgumentException(s"dq profile column '$c' does not exist")))
     // names are interpolated into stack() SQL — restrict to plain
     // identifiers rather than attempt escaping
     require(field.name.matches("[A-Za-z_][A-Za-z0-9_]*"),

@@ -1,6 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.jdbc.JdbcDialects
+
+import graft.operators.RetailEtl
 
 /** JDBC source for the reference's online-sales extract
   * (/root/reference/scripts/extraction.py:98-144 reads the
@@ -54,19 +57,58 @@ object SalesJdbc {
           "numPartitions" -> cfg.numPartitions.toString)
       }
 
+  private def connect(url: String, user: Option[String],
+                      password: Option[String]): java.sql.Connection = {
+    val props = new java.util.Properties()
+    user.foreach(props.setProperty("user", _))
+    password.foreach(props.setProperty("password", _))
+    java.sql.DriverManager.getConnection(url, props)
+  }
+
+  /** `cols` as quoted identifiers of `cfg.table`'s actual columns: each
+    * name resolves against the table's schema the way the session
+    * resolves columns, then is quoted by the URL's dialect — what
+    * Spark's own `JdbcUtils.getInsertStatement` emits. One
+    * `SELECT * … WHERE 1=0` round trip on the driver. Unquoted SQL
+    * breaks on a quoted lower-case table (the Postgres shape,
+    * `"sale_id"`), and quoting the caller's spelling breaks on an
+    * unquoted upper-case one (Derby's `SALE_ID`); the resolved, quoted
+    * name fits both.
+    */
+  private[graft] def quotedColumns(spark: SparkSession, cfg: Config,
+                                   cols: Seq[String]): Seq[String] = {
+    val dialect = JdbcDialects.get(cfg.url)
+    val conn = connect(cfg.url, cfg.user, cfg.password)
+    val actual = try {
+      val st = conn.prepareStatement(dialect.getSchemaQuery(cfg.table))
+      try {
+        val md = st.executeQuery().getMetaData
+        (1 to md.getColumnCount).map(md.getColumnLabel)
+      } finally st.close()
+    } finally conn.close()
+    val cs = RetailEtl.caseSensitive(spark)
+    cols.map { c =>
+      val name = RetailEtl.resolveName(actual, c, cs).getOrElse(throw new IllegalArgumentException(
+        s"column '$c' not found in ${cfg.table} (${actual.mkString(", ")})"))
+      dialect.quoteIdentifier(name)
+    }
+  }
+
   /** One-row probe for the partition bounds (pushed down to the
     * database as min/max — trivial for a btree-indexed key). None
     * when the table is empty (min/max are NULL): the caller falls
-    * back to an unpartitioned read instead of NPE-ing.
+    * back to an unpartitioned read instead of NPE-ing. Any integral
+    * key width reads back (the reference's sink key is INT).
     */
   def probeBounds(spark: SparkSession, cfg: Config): Option[(Long, Long)] = {
+    val pc = quotedColumns(spark, cfg, Seq(cfg.partitionColumn)).head
     val probe = spark.read.format("jdbc")
       .options(baseOptions(cfg) + ("dbtable" ->
-        s"(SELECT min(${cfg.partitionColumn}) AS lo, max(${cfg.partitionColumn}) AS hi FROM ${cfg.table}) b"))
+        s"(SELECT min($pc) AS lo, max($pc) AS hi FROM ${cfg.table}) b"))
       .load()
       .collect()(0)
     if (probe.isNullAt(0) || probe.isNullAt(1)) None
-    else Some((probe.getLong(0), probe.getLong(1)))
+    else Some((probe.getAs[Number](0).longValue, probe.getAs[Number](1).longValue))
   }
 
   def read(spark: SparkSession, cfg: Config): DataFrame = {
@@ -80,8 +122,7 @@ object SalesJdbc {
     * [[graft.operators.RetailEtl.convertTyped]].
     */
   def extractOnlineSales(spark: SparkSession, cfg: Config): DataFrame =
-    graft.operators.RetailEtl.asTransportStrings(
-      graft.operators.RetailEtl.validateColumns(read(spark, cfg)))
+    RetailEtl.asTransportStrings(RetailEtl.validateColumns(read(spark, cfg)))
 
   // ——— write side (reference loading.py:124-161: CSV save + MySQL
   // truncate + batch INSERT … ON DUPLICATE KEY UPDATE) ———
@@ -170,13 +211,19 @@ object SalesJdbc {
     * `df` replace their keyed counterparts, all other rows survive —
     * the incremental-maintenance contract of
     * [[graft.operators.RetailEtl.upsertSummary]], pushed to the sink.
+    * Column names are resolved against the table and quoted
+    * ([[quotedColumns]]), so the statements fit quoted and unquoted
+    * DDL alike.
     */
   def upsertInto(df: DataFrame, cfg: Config, keyCols: Seq[String],
                  batchSize: Int = 1000): Unit = {
     import org.apache.spark.sql.types._
     val cols = df.schema.fieldNames.toSeq
-    val oneShot = upsertSql(cfg.url, cfg.table, cols, keyCols)
-    val (updateSql, insertSql) = updateThenInsertSql(cfg.table, cols, keyCols)
+    checkUpsertCols(cols, keyCols)
+    val quoted = quotedColumns(df.sparkSession, cfg, cols)
+    val quotedKeys = keyCols.map(k => quoted(cols.indexOf(k)))
+    val oneShot = upsertSql(cfg.url, cfg.table, quoted, quotedKeys)
+    val (updateSql, insertSql) = updateThenInsertSql(cfg.table, quoted, quotedKeys)
     // parameter order of the UPDATE: non-key cols, then key cols
     val updateIdx: Array[Int] =
       (cols.filterNot(keyCols.contains) ++ keyCols).map(cols.indexOf).toArray
@@ -209,10 +256,7 @@ object SalesJdbc {
           }
         }
         val all = Array.tabulate(cols.length)(identity)
-        val props = new java.util.Properties()
-        user.foreach(props.setProperty("user", _))
-        password.foreach(props.setProperty("password", _))
-        val conn = java.sql.DriverManager.getConnection(url, props)
+        val conn = connect(url, user, password)
         try {
           conn.setAutoCommit(false)
           oneShot match {

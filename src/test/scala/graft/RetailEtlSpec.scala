@@ -5,8 +5,12 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.{Seconds, Span}
+
 import graft.operators.RetailEtl
-import graft.sources.SalesCsv
+import graft.sources.{SalesCsv, SalesJdbc}
 
 /** Reference-fidelity spec: reproduces the reference pipeline's own
   * sample data and golden output.
@@ -15,7 +19,7 @@ import graft.sources.SalesCsv
   * (15 in-store rows incl. invalid ones) and the expected summary is
   * /root/reference/data/output/sales_summary.csv.
   */
-class RetailEtlSpec extends SparkSpec {
+class RetailEtlSpec extends SparkSpec with Eventually {
   import spark.implicits._
 
   // sale_id, product_id, quantity, sale_amount, sale_date — strings as
@@ -81,10 +85,7 @@ class RetailEtlSpec extends SparkSpec {
 
   test("combined two-source pipeline matches reference semantics") {
     // reference golden sales_summary.csv (store + online samples):
-    // 101:13/300, 102:9/225, 103:7/180, 104:7/165, 105:3/78, 106:6/135
-    assert(summary() == Map(
-      101L -> (13.0, 300.0), 102L -> (9.0, 225.0), 103L -> (7.0, 180.0),
-      104L -> (7.0, 165.0), 105L -> (3.0, 78.0), 106L -> (6.0, 135.0)))
+    assert(summary() == goldenSummary)
   }
 
   test("pipeline output equals the reference's actual golden CSV, when present") {
@@ -145,6 +146,144 @@ class RetailEtlSpec extends SparkSpec {
     val bad = Seq((1L, -5.0, 10.0)).toDF("product_id", "total_quantity", "total_sale_amount")
     val e = intercept[Exception](RetailEtl.validateSummary(bad).collect())
     assert(e.getMessage.toLowerCase.contains("negative"))
+  }
+
+  test("validateColumns resolves case-variant names to the canonical ones") {
+    val upper = Seq(("1", "2", "3", "4", "2025-04-02"))
+      .toDF("SALE_ID", "Product_Id", "quantity", "SALE_AMOUNT", "sale_date")
+    val v = RetailEtl.validateColumns(upper)
+    assert(v.columns.toSeq == RetailEtl.RequiredColumns)
+    assert(v.collect().head.getString(1) == "2")
+    // names that already match come back as the very same frame
+    val exact = df(storeRows)
+    assert(RetailEtl.validateColumns(exact) eq exact)
+    // a case-sensitive session does not fold case
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try {
+      val e = intercept[IllegalArgumentException](RetailEtl.validateColumns(upper))
+      assert(e.getMessage.contains("sale_id") && e.getMessage.contains("product_id"))
+    } finally spark.conf.unset("spark.sql.caseSensitive")
+  }
+
+  // ——— the transform→load boundary (reference transformation.py:95-121
+  // → loading.py:124-161): the online source lives in Derby in the
+  // Postgres shape (quoted lower-case columns), the in-store source is
+  // a CSV file, and both sinks read the summary `pipeline` returns ———
+
+  private val derbyUrl = "jdbc:derby:memory:graftetl;create=true"
+  // 101:13/300, 102:9/225, 103:7/180, 104:7/165, 105:3/78, 106:6/135
+  private lazy val goldenSummary = Map(
+    101L -> (13.0, 300.0), 102L -> (9.0, 225.0), 103L -> (7.0, 180.0),
+    104L -> (7.0, 165.0), 105L -> (3.0, 78.0), 106L -> (6.0, 135.0))
+
+  private def derby(sql: String*): Unit = {
+    val conn = java.sql.DriverManager.getConnection(derbyUrl)
+    try {
+      val st = conn.createStatement()
+      try sql.foreach(st.execute) finally st.close()
+    } finally conn.close()
+  }
+
+  private def insertOnline(rows: Seq[(String, String, String, String, String)]): Unit = {
+    val conn = java.sql.DriverManager.getConnection(derbyUrl)
+    try {
+      val ps = conn.prepareStatement("INSERT INTO online_sales VALUES (?, ?, ?, ?, ?)")
+      rows.foreach { case (id, p, q, a, d) =>
+        ps.setLong(1, id.toLong); ps.setLong(2, p.toLong)
+        if (q == null) ps.setNull(3, java.sql.Types.DOUBLE) else ps.setDouble(3, q.toDouble)
+        if (a == null) ps.setNull(4, java.sql.Types.DOUBLE) else ps.setDouble(4, a.toDouble)
+        ps.setDate(5, java.sql.Date.valueOf(d))
+        ps.addBatch()
+      }
+      ps.executeBatch(); ps.close()
+    } finally conn.close()
+  }
+
+  /** Fresh sources and sink; returns the typed online frame, the
+    * in-store frame, the sink config and a CSV artifact path. */
+  private def etlSources(): (DataFrame, DataFrame, SalesJdbc.Config, String) = {
+    Seq("online_sales", "etl_summary").foreach(t => scala.util.Try(derby(s"DROP TABLE $t")))
+    derby("CREATE TABLE online_sales (\"sale_id\" BIGINT, \"product_id\" BIGINT, " +
+        "\"quantity\" DOUBLE, \"sale_amount\" DOUBLE, \"sale_date\" DATE)",
+      "CREATE TABLE etl_summary (product_id BIGINT PRIMARY KEY, " +
+        "total_quantity DOUBLE, total_sale_amount DOUBLE)")
+    insertOnline(onlineRows)
+    val dir = Files.createTempDirectory("graft_etl")
+    val csv = dir.resolve("in_store_sales.csv")
+    Files.write(csv, ("sale_id,product_id,quantity,sale_amount,sale_date\n" +
+      storeRows.map(_.productIterator.map(v => Option(v).getOrElse("")).mkString(","))
+        .mkString("\n")).getBytes("UTF-8"))
+    val online = RetailEtl.convertTyped(SalesJdbc.extractOnlineSales(spark,
+      SalesJdbc.Config(derbyUrl, bounds = Some((1L, onlineRows.size.toLong)), numPartitions = 2)))
+    (online, SalesCsv.read(spark, csv.toString),
+      SalesJdbc.Config(derbyUrl, table = "etl_summary"), dir.resolve("summary_csv").toString)
+  }
+
+  private def csvArtifact(path: String): Map[Long, (Double, Double)] =
+    spark.read.option("header", "true")
+      .schema("product_id BIGINT, total_quantity DOUBLE, total_sale_amount DOUBLE")
+      .csv(path).collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+
+  private def jdbcTable(cfg: SalesJdbc.Config): Map[Long, (Double, Double)] =
+    SalesJdbc.read(spark, cfg.copy(partitionColumn = "product_id")).collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+
+  /** Completed stages whose lineage scans a JDBC or file source. */
+  private def sourceStages(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(r =>
+            r.name.contains("JDBCRDD") || r.name.contains("FileScanRDD")))
+          n.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBus.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.graft.ListenerBus.drain(sc) }
+    finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  test("pipeline reads the sources once for both sinks") {
+    val (online, store, sink, out) = etlSources()
+    val stages = sourceStages {
+      val summary = RetailEtl.pipeline(online, store)
+      SalesJdbc.writeSummaryCsv(summary, out, singleFile = true)
+      SalesJdbc.writeSummary(summary, sink)
+    }
+    assert(stages == 1, s"$stages source-reading stages for one batch")
+    assert(csvArtifact(out) == goldenSummary)
+    assert(jdbcTable(sink) == goldenSummary)
+  }
+
+  test("both sinks load one snapshot, whatever the source does in between") {
+    val (online, store, sink, out) = etlSources()
+    val summary = RetailEtl.pipeline(online, store)
+    SalesJdbc.writeSummaryCsv(summary, out, singleFile = true)
+    insertOnline(Seq(("100", "101", "5", "500.00", "2025-04-04"),
+      ("101", "107", "1", "10.00", "2025-04-04")))
+    SalesJdbc.writeSummary(summary, sink)
+    assert(csvArtifact(out) == goldenSummary)
+    assert(jdbcTable(sink) == csvArtifact(out))
+  }
+
+  test("dropped pipeline frames release their checkpoint blocks") {
+    val sc = spark.sparkContext
+    val online = RetailEtl.convertTyped(df(onlineRows))
+    val store = RetailEtl.convertTyped(df(storeRows))
+    val baseline = sc.getPersistentRDDs.keySet
+    var held: DataFrame = RetailEtl.pipeline(online, store)
+    assert((sc.getPersistentRDDs.keySet -- baseline).size == 1,
+      "a live summary is one registered checkpoint")
+    held = null
+    (2 to 20).foreach(_ => assert(RetailEtl.pipeline(online, store).count() == 6))
+    eventually(timeout(Span(60, Seconds)), interval(Span(1, Seconds))) {
+      System.gc()
+      val left = sc.getPersistentRDDs.keySet -- baseline
+      assert(left.isEmpty, s"${left.size} checkpointed summaries still registered")
+    }
   }
 
   test("transport round-trip is value-preserving") {
