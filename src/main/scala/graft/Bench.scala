@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -97,30 +95,21 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // FAIR job scheduling (r18; corrected by the r18 review): FAIR
-      // is a NO-OP without per-chain pool assignment — every TaskSet
-      // lands in the single default pool, which is FIFO inside even
-      // under FAIR mode (FairSchedulableBuilder.buildDefaultPool in
-      // the shipped spark-core jar), so the 7.9→6.4 s delta the r18
-      // commit attributed to this flag was the warm pass + host
-      // variance. primeSharedCaches now assigns each prime chain its
-      // OWN pool, which makes the flag real; A/B at sf0.1 (3
-      // interleaved JVM runs each): FAIR 6.0–6.3 s vs FIFO
-      // 5.5–13.9 s — min-neutral, variance-reducing (FIFO's convoy
-      // tail is the 13.9). Kept for the 100 TB posture: one driver
-      // multiplexing pipelines is exactly the FAIR-pools shape.
-      // Neutral for the per-key timings: keys run one at a time (a
-      // single job submitter sees FIFO and FAIR identically).
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // FAIR job scheduling: FAIR is a NO-OP without per-chain pool
+    // assignment — every TaskSet lands in the single default pool,
+    // which is FIFO inside even under FAIR mode
+    // (FairSchedulableBuilder.buildDefaultPool in the shipped
+    // spark-core jar). primeSharedCaches assigns each prime chain its
+    // OWN pool, which makes the flag real; A/B at sf0.1 (3
+    // interleaved JVM runs each): FAIR 6.0–6.3 s vs FIFO 5.5–13.9 s —
+    // min-neutral, variance-reducing (FIFO's convoy tail is the
+    // 13.9). Kept for the 100 TB posture: one driver multiplexing
+    // pipelines is exactly the FAIR-pools shape. Neutral for the
+    // per-key timings: keys run one at a time (a single job submitter
+    // sees FIFO and FAIR identically).
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-bench",
+      Map("spark.scheduler.mode" -> "FAIR"))
 
     // warmup: codegen + parquet reader + shuffle machinery + the
     // interpreted higher-order-function evaluator (lambdas never
@@ -178,8 +167,8 @@ object Bench {
     val primeWarmDir = sys.env.getOrElse("SPARK_GRAFT_PRIME_WARM_DIR",
       "/root/testdata/sf0.001")
     // never warm on the BENCH fixture itself (r18 review): the warm
-    // pass populates every SessionCache under the exact (session,
-    // dir) key the timed prime would look up, so warmDir == sfDir
+    // pass populates the SessionMemo under the exact (session, dir)
+    // keys the timed prime would look up, so warmDir == sfDir
     // would make the timed prime an all-cache-hit ~0 s and every
     // per-key artifact prebuilt untimed — silently meaningless
     // numbers. A sf0.001 bench run (the smoke shape) skips the warm
@@ -446,19 +435,6 @@ object Bench {
       else growthNote(total, primeSec, refTotal, refPrime,
         sys.env.get("SPARK_GRAFT_GROWTH_NOTE"), noisy)
     growth.foreach(g => System.err.println(s"[bench] GROWTH: $g"))
-    // JSON string escape incl. ALL control chars (r18 review): a tab
-    // or CR in SPARK_GRAFT_GROWTH_NOTE would otherwise make the
-    // contract line invalid JSON — and the next round's band-ref
-    // load silently drops every band when the artifact won't parse
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // mid-run noisy verdict: any trail sample > 2× the committed
     // reference — same bar as the startup stamp, applied to the
     // whole run's duration instead of its first second
@@ -478,8 +454,8 @@ object Bench {
       s""""spin_ref_ms":${refSpinMs.map(fmt).getOrElse("null")},""" +
       s""""noisy":$noisy,""" +
       s""""spin_trail":$spinTrailJson,"noisy_mid":$noisyMid,""" +
-      s""""prime_warm":${if (primeWarmed) jstr(primeWarmDir) else "null"},""" +
-      s""""growth_note":${growth.map(jstr).getOrElse("null")},""" +
+      s""""prime_warm":${if (primeWarmed) Json.str(primeWarmDir) else "null"},""" +
+      s""""growth_note":${growth.map(Json.str).getOrElse("null")},""" +
       s""""sf":"$sfDir"}"""
     // best-effort: an unwritable detail path (read-only target/, bad
     // SPARK_GRAFT_BENCH_OUT) must not kill the run after all timing

@@ -29,11 +29,14 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  /** Local session for tests/benchmarks. */
-  def local(cores: Int = 4, appName: String = "graft-local"): SparkSession = {
+  /** Local session for tests, benchmarks and dev tools; `conf` adds a
+    * caller's own settings (the bench's FAIR scheduler). */
+  def local(cores: Int = 4, appName: String = "graft-local",
+            conf: Map[String, String] = Map.empty): SparkSession = {
     val s = builder(appName, shufflePartitions = cores)
       .master(s"local[$cores]")
       .config("spark.ui.enabled", "false")
+      .config(conf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

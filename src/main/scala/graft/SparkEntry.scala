@@ -56,106 +56,10 @@ object SparkEntry {
       existing = sourceSummary(s, dir, "F"),
       updates = sourceSummary(s, dir, "O"))
 
-  /** Session-scoped shared-relation cache (r17, ADVICE): a TrieMap
-    * keyed by (session, dir) whose entries are EVICTED when the
-    * owning SparkContext ends — a bare TrieMap pins stopped sessions
-    * and their eagerly localCheckpoint'ed blocks for the JVM
-    * lifetime (harmless in the one-session bench/driver processes, a
-    * leak in any long-lived multi-session embedding). Every instance
-    * registers in one global set; the first insert for a CONTEXT
-    * installs a single ApplicationEnd listener (r18: one per
-    * context, not per session — per-session listeners accumulated
-    * on the bus under session churn) that sweeps every session of
-    * that context from every registered cache, and every insert
-    * opportunistically purges entries whose context has already
-    * stopped (covering the insert-after-sweep race). Known
-    * boundary: sessions CHURNED over one long-lived context
-    * (newSession/cloneSession per tenant) hold their CACHE ENTRIES
-    * until that context ends — there is no per-session lifecycle
-    * event to hook (the listener itself no longer grows with churn);
-    * an embedding with per-tenant sessions should reuse them
-    * per (tenant, dir), which is also what makes this cache pay. */
-  private final class SessionCache[V] {
-    private val m = scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), V]
-    SessionCache.all.add(this)
-    def getOrElseUpdate(k: (SparkSession, String), v: => V): V = {
-      SessionCache.hookEviction(k._1)
-      m.getOrElseUpdate(k, v)
-    }
-    def evictContext(sc: org.apache.spark.SparkContext): Unit =
-      m.keySet.filter(_._1.sparkContext eq sc).foreach(m.remove)
-    def evictStopped(): Unit =
-      m.keySet.filter(_._1.sparkContext.isStopped).foreach(m.remove)
-    def countFor(s: SparkSession): Int = m.keySet.count(_._1 eq s)
-  }
-
-  /** Test hook (r17): live shared-cache entries for `s` across every
-    * registered cache — lets the eviction listener be asserted
-    * without stopping the suite's shared context. */
-  private[graft] def sessionCacheEntries(s: SparkSession): Int = {
-    var n = 0
-    SessionCache.all.forEach(c => n += c.countFor(s))
-    n
-  }
-  private object SessionCache {
-    val all: java.util.Set[SessionCache[_]] =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[SessionCache[_]]()
-    // hooked per CONTEXT, not per session (r18, ADVICE): a
-    // per-session listener meant churned sessions over one long-lived
-    // context accumulated listeners and strong session refs on the
-    // bus until context end — every bus event fanning out to dead
-    // sessions' listeners. One context-level listener sweeps every
-    // session of that context; contexts are few and long-lived by
-    // construction, so the set is bounded.
-    private val hooked = java.util.concurrent.ConcurrentHashMap
-      .newKeySet[org.apache.spark.SparkContext]()
-    /** The ApplicationEnd sweep, callable directly (the r18 test
-      * hook — posting a synthetic ApplicationEnd onto a LIVE bus
-      * also feeds Spark's own AppStatus/SQL listeners on a context
-      * still in use). */
-    def sweepContext(sc: org.apache.spark.SparkContext): Unit = {
-      all.forEach(_.evictContext(sc))
-      // un-hook only a STOPPED context (isStopped is already true
-      // inside onApplicationEnd — SparkContext.stop() flips the flag
-      // before posting the event). A direct sweep on a LIVE context
-      // (the reclamation/test path) must keep its `hooked` entry:
-      // removing it would make the next cache touch addSparkListener
-      // a SECOND identical listener while the first is still on the
-      // bus — re-growing per sweep+touch cycle, the exact
-      // accumulation this r18 change exists to prevent.
-      if (sc.isStopped) hooked.remove(sc)
-      ()
-    }
-    def hookEviction(s: SparkSession): Unit = {
-      // opportunistic reclamation on the way in (r17 review): an
-      // entry whose owning context already stopped can never be
-      // swept by its own listener again — either it was inserted in
-      // the race window after the sweep ran, or the listener fired
-      // before the insert existed. Purging here bounds that window
-      // to "until any session touches any cache next".
-      all.forEach(_.evictStopped())
-      // and drop dead contexts whose listener never fired (bus
-      // already stopped at the time of the post) — bounds `hooked`'s
-      // strong SparkContext refs under context churn
-      hooked.removeIf(_.isStopped)
-      val sc = s.sparkContext
-      if (hooked.add(sc))
-        sc.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onApplicationEnd(
-                e: org.apache.spark.scheduler.SparkListenerApplicationEnd)
-                : Unit = sweepContext(sc)
-          })
-    }
-  }
-
-  /** Test hook (r18): run the context sweep directly — what the
-    * ApplicationEnd listener does, without poisoning a live bus
-    * with a synthetic end-of-application event. */
-  private[graft] def sessionCacheSweep(
-      sc: org.apache.spark.SparkContext): Unit =
-    SessionCache.sweepContext(sc)
+  /** One shared artifact per (session, dir), memoized in [[SessionMemo]]
+    * and billed to `name` in [[primeDetail]] / [[primeSelf]] when built. */
+  private def shared[V](name: String, s: SparkSession, dir: String)(build: => V): V =
+    SessionMemo(s, dir, name)(primeTimed(name)(build))
 
   /** Default-parameter [[Dedup.blockingTrunk]] over the documents
     * table (shingle sets + df-capped candidate pairs) and the
@@ -173,146 +77,116 @@ object SparkEntry {
     * would persist per corpus snapshot as a table (DISK_ONLY, not
     * executor memory — see the [[Dedup.BlockingTrunk]] scaladoc).
     * Caches are keyed on (session, dir) and EVICTED when the
-    * session's context ends (see [[SessionCache]]) — in the
+    * session's context ends (see [[SessionMemo]]) — in the
     * one-session driver/bench JVMs that is process exit, but a
     * long-lived multi-session embedding must not pin stopped
     * sessions and their checkpoint blocks forever. */
-  private val setsCache =
-    new SessionCache[DataFrame]
   private def sharedShingleSets(s: SparkSession, dir: String): DataFrame =
-    setsCache.getOrElseUpdate((s, dir), primeTimed("shingle_sets")(
+    shared("shingle_sets", s, dir)(
       Dedup.blockingTrunk(Tables.documents(s, dir)).sets
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
   // the 20-threshold Gopher metric+flag pass over the quality
   // fixture: the fused kernels and segment folds run ONCE per
   // (session, dir) — gate, apply, cost, and the quality profile all
   // read this relation (the stream key keeps its own full code path:
   // the streaming plan IS its product)
-  private val gopherFlaggedCache =
-    new SessionCache[DataFrame]
   private def sharedGopherFlagged(s: SparkSession, dir: String): DataFrame =
-    gopherFlaggedCache.getOrElseUpdate((s, dir), primeTimed("gopher_flagged")(
+    shared("gopher_flagged", s, dir)(
       TextAnalysis.gopherFlagged(
         TextAnalysis.synthQualityCorpus(Tables.documents(s, dir)))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   // perceptual-hash signature store: the decode runs ONCE per
   // (session, dir) — production persists these per corpus snapshot;
   // all three phash keys read the store instead of re-decoding
-  private val phashSigCache =
-    new SessionCache[DataFrame]
   private def sharedPhashSigs(s: SparkSession, dir: String): DataFrame =
-    phashSigCache.getOrElseUpdate((s, dir), primeTimed("phash_sigs")(
+    shared("phash_sigs", s, dir)(
       operators.Multimodal.phashSignatures(
         operators.Multimodal.synthMixedCorpus(Tables.documents(s, dir)))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   // perceptual-audio signature store, same economics as the phash
   // store: decode once per (session, dir), both audio keys read it
-  private val audioSigCache =
-    new SessionCache[DataFrame]
   private def sharedAudioSigs(s: SparkSession, dir: String): DataFrame =
-    audioSigCache.getOrElseUpdate((s, dir), primeTimed("audio_sigs")(
+    shared("audio_sigs", s, dir)(
       operators.Multimodal.audioSignatures(
         operators.Multimodal.synthScaledWavCorpus(Tables.documents(s, dir)))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   // the perceptual GROUP closures, pinned (r14): the groups key and
   // its keep-best twin read the SAME min-label relation — without
   // the pin each key re-runs the pointer-doubling closure
-  private val phashGroupsCache =
-    new SessionCache[DataFrame]
   private def sharedPhashGroups(s: SparkSession, dir: String): DataFrame =
-    phashGroupsCache.getOrElseUpdate((s, dir), primeTimed("phash_groups")(
+    shared("phash_groups", s, dir)(
       operators.Multimodal.phashGroups(
         operators.Multimodal.synthMixedCorpus(Tables.documents(s, dir)),
         sigs = Some(sharedPhashSigs(s, dir)))
-        .localCheckpoint(true)))
-  private val audioGroupsCache =
-    new SessionCache[DataFrame]
+        .localCheckpoint(true))
   private def sharedAudioGroups(s: SparkSession, dir: String): DataFrame =
-    audioGroupsCache.getOrElseUpdate((s, dir), primeTimed("audio_groups")(
+    shared("audio_groups", s, dir)(
       operators.Multimodal.audioSigGroups(
         operators.Multimodal.synthScaledWavCorpus(Tables.documents(s, dir)),
         sigs = Some(sharedAudioSigs(s, dir)))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   // offset-robust winnowed audio fingerprint store (r14): decode +
   // winnow runs ONCE per (session, dir) over the offset fixture;
   // the pairs and incremental keys read the store
-  private val audioWinnowSigCache =
-    new SessionCache[DataFrame]
   private def sharedAudioWinnowSigs(s: SparkSession, dir: String): DataFrame =
-    audioWinnowSigCache.getOrElseUpdate((s, dir),
-      primeTimed("audio_winnow_sigs")(
-        operators.Multimodal.audioWinnowSignatures(
-          operators.Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir)))
-          .localCheckpoint(true)))
+    shared("audio_winnow_sigs", s, dir)(
+      operators.Multimodal.audioWinnowSignatures(
+        operators.Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir)))
+        .localCheckpoint(true))
 
   // the winnow-tier GROUP closure, pinned (r15): the groups key and
   // the new keep-best key read the same min-label relation
-  private val audioWinnowGroupsCache =
-    new SessionCache[DataFrame]
   private def sharedAudioWinnowGroups(s: SparkSession, dir: String): DataFrame =
-    audioWinnowGroupsCache.getOrElseUpdate((s, dir),
-      primeTimed("audio_winnow_groups")(
-        operators.Multimodal.audioWinnowGroups(
-          operators.Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir)),
-          sigs = Some(sharedAudioWinnowSigs(s, dir)))
-          .localCheckpoint(true)))
+    shared("audio_winnow_groups", s, dir)(
+      operators.Multimodal.audioWinnowGroups(
+        operators.Multimodal.synthOffsetWavCorpus(Tables.documents(s, dir)),
+        sigs = Some(sharedAudioWinnowSigs(s, dir)))
+        .localCheckpoint(true))
 
   // crop-robust winnowed image fingerprint store (r15): decode +
   // tile + winnow runs ONCE per (session, dir) over the crop
   // fixture; all four image-winnow keys read the store
-  private val imageWinnowSigCache =
-    new SessionCache[DataFrame]
   private def sharedImageWinnowSigs(s: SparkSession, dir: String): DataFrame =
-    imageWinnowSigCache.getOrElseUpdate((s, dir),
-      primeTimed("image_winnow_sigs")(
-        operators.Multimodal.imageWinnowSignatures(
-          operators.Multimodal.synthCropPngCorpus(Tables.documents(s, dir)))
-          .localCheckpoint(true)))
+    shared("image_winnow_sigs", s, dir)(
+      operators.Multimodal.imageWinnowSignatures(
+        operators.Multimodal.synthCropPngCorpus(Tables.documents(s, dir)))
+        .localCheckpoint(true))
 
   // the image-winnow GROUP closure, pinned (r15): groups + keep-best
   // read the same min-label relation
-  private val imageWinnowGroupsCache =
-    new SessionCache[DataFrame]
   private def sharedImageWinnowGroups(s: SparkSession, dir: String): DataFrame =
-    imageWinnowGroupsCache.getOrElseUpdate((s, dir),
-      primeTimed("image_winnow_groups")(
-        operators.Multimodal.imageWinnowGroups(
-          operators.Multimodal.synthCropPngCorpus(Tables.documents(s, dir)),
-          sigs = Some(sharedImageWinnowSigs(s, dir)))
-          .localCheckpoint(true)))
+    shared("image_winnow_groups", s, dir)(
+      operators.Multimodal.imageWinnowGroups(
+        operators.Multimodal.synthCropPngCorpus(Tables.documents(s, dir)),
+        sigs = Some(sharedImageWinnowSigs(s, dir)))
+        .localCheckpoint(true))
 
   // the quality-FIXTURE corpus's dup-gram store + Bloom (r14): the
   // nightly artifact the composed intake gate probes — built from
   // the same fixture corpus the gate streams
-  private val qualityDupStoreCache = new SessionCache[
-    (DataFrame, org.apache.spark.util.sketch.BloomFilter)]
   private def sharedQualityDupStore(s: SparkSession, dir: String)
       : (DataFrame, org.apache.spark.util.sketch.BloomFilter) =
-    qualityDupStoreCache.getOrElseUpdate((s, dir),
-      primeTimed("quality_dup_store") {
-        val store = TextAnalysis.dupNgramStore(
-          TextAnalysis.synthIntakeCorpus(Tables.documents(s, dir)))
-          .localCheckpoint(true)
-        (store, graft.streaming.DocStream.storeBloom(store))
-      })
+    shared("quality_dup_store", s, dir) {
+      val store = TextAnalysis.dupNgramStore(
+        TextAnalysis.synthIntakeCorpus(Tables.documents(s, dir)))
+        .localCheckpoint(true)
+      (store, graft.streaming.DocStream.storeBloom(store))
+    }
 
   // the HISTORY slice's dup-gram store (doc_id % 10 <> 0 — what the
   // nightly batch would have persisted before today's delta): the
   // incremental curation gate probes it; grams duplicated only via
   // the delta must NOT appear, so this is NOT a filter of the
   // full-corpus store
-  private val histDupStoreCache =
-    new SessionCache[DataFrame]
   private def sharedHistDupStore(s: SparkSession, dir: String): DataFrame =
-    histDupStoreCache.getOrElseUpdate((s, dir),
-      primeTimed("hist_dup_store")(
-        TextAnalysis.dupNgramStore(
-          Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
-          .localCheckpoint(true)))
+    shared("hist_dup_store", s, dir)(
+      TextAnalysis.dupNgramStore(
+        Tables.documents(s, dir).filter(col("doc_id") % 10 =!= 0))
+        .localCheckpoint(true))
 
   // corpus-duplication coverage trunk: the doc-grain relation both
   // the source rollup and the per-doc gate read — the corpus-wide
@@ -321,13 +195,11 @@ object SparkEntry {
   // DUPLICATED-occurrence relation (proportional to duplicated
   // positions, not the corpus) — the coverage fold, the gate, the
   // r13 span extraction, and the intake store all derive from it
-  private val dupOccCache =
-    new SessionCache[DataFrame]
   private def sharedDupNgramOcc(s: SparkSession, dir: String): DataFrame =
-    dupOccCache.getOrElseUpdate((s, dir), primeTimed("dup_ngram_occ")(
+    shared("dup_ngram_occ", s, dir)(
       TextAnalysis.dupNgramDupOcc(
         TextAnalysis.dupNgramToks(Tables.documents(s, dir)))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   // the fused curate FLAGS relation (r15): one row per doc carrying
   // every per-doc gate decision + residual billing — the intake gate
@@ -335,26 +207,22 @@ object SparkEntry {
   // funnel) read this one materialization; the gate chain's corpus
   // work runs once per (session, dir) and bills to prime like every
   // other trunk.
-  private val curateFlagsCache =
-    new SessionCache[DataFrame]
   private def sharedCurateFlags(s: SparkSession, dir: String): DataFrame =
-    curateFlagsCache.getOrElseUpdate((s, dir), primeTimed("curate_flags")(
+    shared("curate_flags", s, dir)(
       operators.Curation.curateFlags(Tables.documents(s, dir),
         gopherFlags = Some(sharedGopherFlagged(s, dir)),
         dupDocs = Some(sharedDupNgramDocs(s, dir)),
         dupStarts = Some(operators.TextAnalysis.startsOfOcc(
           sharedDupNgramOcc(s, dir))),
         embeddings = Some(Tables.embeddings(s, dir)))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
-  private val dupNgramDocsCache =
-    new SessionCache[DataFrame]
   private def sharedDupNgramDocs(s: SparkSession, dir: String): DataFrame =
-    dupNgramDocsCache.getOrElseUpdate((s, dir), primeTimed("dup_ngram_docs")(
+    shared("dup_ngram_docs", s, dir)(
       TextAnalysis.dupNgramDocsOf2(
         TextAnalysis.dupNgramToks(Tables.documents(s, dir)),
         TextAnalysis.startsOfOcc(sharedDupNgramOcc(s, dir)))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   // the persisted dup-gram STORE + its Bloom, built once per
   // (session, dir): production writes both as nightly artifacts next
@@ -362,33 +230,27 @@ object SparkEntry {
   // before the store join ever sees a row (r14). Without the shared
   // build, every gate construction would pay the store count +
   // Bloom aggregate as serial driver actions.
-  private val dupStoreCache = new SessionCache[
-    (DataFrame, org.apache.spark.util.sketch.BloomFilter)]
   private def sharedDupStore(s: SparkSession, dir: String)
       : (DataFrame, org.apache.spark.util.sketch.BloomFilter) =
-    dupStoreCache.getOrElseUpdate((s, dir), primeTimed("dup_store_bloom") {
+    shared("dup_store_bloom", s, dir) {
       val store = TextAnalysis.dupNgramStore(Tables.documents(s, dir),
         occ = Some(sharedDupNgramOcc(s, dir))).localCheckpoint(true)
       (store, graft.streaming.DocStream.storeBloom(store))
-    })
+    }
 
-  private val candsCache =
-    new SessionCache[DataFrame]
   // sets and candidates cache separately: minhash/groups consume only
   // the sets, and must not pay the inverted-index candidate build as
   // a side effect of asking for them
   private def sharedTrunk(s: SparkSession, dir: String): Dedup.BlockingTrunk = {
     val sets = sharedShingleSets(s, dir)
     Dedup.BlockingTrunk(sets,
-      candsCache.getOrElseUpdate((s, dir), primeTimed("blocked_cands")(
-        Dedup.candidatesOf(sets).localCheckpoint(true))))
+      shared("blocked_cands", s, dir)(
+        Dedup.candidatesOf(sets).localCheckpoint(true)))
   }
-  private val pairsCache =
-    new SessionCache[DataFrame]
   private def sharedBlockedPairs(s: SparkSession, dir: String): DataFrame =
-    pairsCache.getOrElseUpdate((s, dir), primeTimed("blocked_pairs")(
+    shared("blocked_pairs", s, dir)(
       Dedup.blockedJaccardPairsOf(sharedTrunk(s, dir))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   /** Persisted [[AnnIndex]] lake layouts, built ONCE per (session,
     * dir) under target/ann-index (gitignored, overwrite-safe): the
@@ -418,10 +280,8 @@ object SparkEntry {
   // input count is paid ONCE and handed to both sibling builds
   // (pickCentroids' thinning is a pure function of n — identical
   // centroids, one count job per sibling saved).
-  private val annBaseIndexCache =
-    new SessionCache[(String, String)]
   private def annBaseIndexPaths(s: SparkSession, dir: String): (String, String) =
-    annBaseIndexCache.getOrElseUpdate((s, dir), primeTimed("ann_indexes") {
+    shared("ann_indexes", s, dir) {
       val base = annIndexBaseDir(dir)
       val emb = Tables.embeddings(s, dir)
       import scala.concurrent.{Await, Future}
@@ -442,15 +302,13 @@ object SparkEntry {
           AnnIndex.buildIvfPq(emb, s"$base/ivfpq", m = 16, nCodes = 32,
             knownN = nFull))))), Duration.Inf)
       (s"$base/ivf", s"$base/ivfpq")
-    })
+    }
   // the incremental twins: built on the even half ("yesterday"), the
   // odd half appended against the STORED centroids (and, for IVF-PQ,
   // STORED codebooks) — no retrain, no history rewrite (the
   // daily-ingest shape)
-  private val annIncrIndexCache =
-    new SessionCache[(String, String)]
   private def annIncrIndexPaths(s: SparkSession, dir: String): (String, String) =
-    annIncrIndexCache.getOrElseUpdate((s, dir), primeTimed("ann_incr_indexes") {
+    shared("ann_incr_indexes", s, dir) {
       val base = annIndexBaseDir(dir)
       val emb = Tables.embeddings(s, dir)
       import scala.concurrent.{Await, Future}
@@ -476,7 +334,7 @@ object SparkEntry {
           AnnIndex.appendIvfPq(emb.filter(col("vec_id") % 2 =!= 0), s"$base/ivfpq_incr")
         }))), Duration.Inf)
       (s"$base/ivf_incr", s"$base/ivfpq_incr")
-    })
+    }
 
   /** The DELETE-lifecycle index (r15): its own layout copy (the
     * shared probes' index stays immutable — a driver key must never
@@ -485,10 +343,8 @@ object SparkEntry {
     * the GDPR-takedown / retention-expiry shape). The delete-probe
     * and compaction-plan keys read it; compaction APPLY mutates, so
     * it runs only in AnnIndexSpec against a scratch copy. */
-  private val annDelIndexCache =
-    new SessionCache[(String, String)]
   private def annDelIndexPaths(s: SparkSession, dir: String): (String, String) =
-    annDelIndexCache.getOrElseUpdate((s, dir), primeTimed("ann_del_indexes") {
+    shared("ann_del_indexes", s, dir) {
       val base = java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get("target", "ann-index",
           java.lang.Integer.toHexString(dir.hashCode))).toString
@@ -522,7 +378,7 @@ object SparkEntry {
       copyLayout(ivfpqSrc, s"$base/ivfpq_del")
       freshLog(s"$base/ivfpq_del")
       (s"$base/ivf_del", s"$base/ivfpq_del")
-    })
+    }
 
   /** Per-artifact build timings, recorded INSIDE each shared-cache
     * getter — whoever triggers a build (the full-run
@@ -578,46 +434,38 @@ object SparkEntry {
     * pagerank and the triangle census — at 100 TB the pair build is
     * the dominant shuffle, and five queries re-deriving it is four
     * wasted passes over the fact. Billed to `shared_prime`. */
-  private val basketPairsCache =
-    new SessionCache[DataFrame]
   private def sharedBasketPairs(s: SparkSession, dir: String): DataFrame =
     // derived from the PINNED trunk (identical composition to
     // basketAffinity) — the second guarded-basket pass the old
     // direct build paid is gone
-    basketPairsCache.getOrElseUpdate((s, dir), primeTimed("basket_pairs")(
+    shared("basket_pairs", s, dir)(
       operators.Analytics.basketAffinityOf(sharedBasketTrunk(s, dir))
-        .localCheckpoint(true)))
-  private val basketTrunkCache =
-    new SessionCache[DataFrame]
+        .localCheckpoint(true))
   private def sharedBasketTrunk(s: SparkSession, dir: String): DataFrame =
-    basketTrunkCache.getOrElseUpdate((s, dir), primeTimed("basket_trunk")(
+    shared("basket_trunk", s, dir)(
       operators.Analytics.guardedBasketsShared(Tables.lineitem(s, dir))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   // shared lexical trunk: one tokenize+count pass (doc_id, tok, tf)
   // for the BM25 family — at 100 TB this is the postings table a
   // search pipeline persists per corpus snapshot
-  private val tfCache =
-    new SessionCache[DataFrame]
   private def sharedTfPostings(s: SparkSession, dir: String): DataFrame =
-    tfCache.getOrElseUpdate((s, dir), primeTimed("tf_postings")(
+    shared("tf_postings", s, dir)(
       Tables.documents(s, dir)
         .select(col("doc_id"),
           explode(operators.TextAnalysis.tokens(col("text"))).as("tok"))
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   // the SCORED postings index (doc_id, tok, tf, term) on top of the
   // tf trunk — BM25 term weights are an index-time artifact (an IR
   // system never recomputes idf per query), so the build is billed
   // to prime like the other persisted indexes
-  private val bm25Cache =
-    new SessionCache[DataFrame]
   private def sharedBm25Postings(s: SparkSession, dir: String): DataFrame =
-    bm25Cache.getOrElseUpdate((s, dir), primeTimed("bm25_index")(
+    shared("bm25_index", s, dir)(
       operators.Similarity.bm25Postings(Tables.documents(s, dir),
         tfPostings = Some(sharedTfPostings(s, dir)))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   def primeSharedCaches(s: SparkSession, dir: String): Unit = {
     primeDetail.clear(); primeSelf.clear()
@@ -692,30 +540,24 @@ object SparkEntry {
   // the pinned CMS sketch relation shared by both text_cms keys
   // (r16): ≤ depth·width rows, one tokenize+explode pass per
   // (session, dir) instead of one per key
-  private val cmsSketchCache =
-    new SessionCache[DataFrame]
   private def sharedCmsSketch(s: SparkSession, dir: String): DataFrame =
-    cmsSketchCache.getOrElseUpdate((s, dir), primeTimed("cms_sketch")(
+    shared("cms_sketch", s, dir)(
       operators.CountMin.sketch(Tables.documents(s, dir))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   // the pinned ML stores the RTBF pair erases from (r16): the
   // fingerprint rows and the winnow-fp inversion are each built ONCE
   // per (session, dir) — without the pin, plan and apply would pay
   // the md5+minhash and tokenize+winnow passes independently
-  private val fpRowsCache =
-    new SessionCache[DataFrame]
   private def sharedFingerprintRows(s: SparkSession, dir: String): DataFrame =
-    fpRowsCache.getOrElseUpdate((s, dir), primeTimed("fp_rows")(
+    shared("fp_rows", s, dir)(
       operators.DedupStore.fingerprintRows(Tables.documents(s, dir))
-        .localCheckpoint(true)))
-  private val winnowFpsCache =
-    new SessionCache[DataFrame]
+        .localCheckpoint(true))
   private def sharedWinnowFps(s: SparkSession, dir: String): DataFrame =
-    winnowFpsCache.getOrElseUpdate((s, dir), primeTimed("winnow_fps")(
+    shared("winnow_fps", s, dir)(
       Tables.documents(s, dir).select(col("doc_id"), explode(
           graft.functions.gf.winnowFingerprints(col("text"), 3, 4)).as("fp"))
-        .localCheckpoint(true)))
+        .localCheckpoint(true))
 
   // the synthetic file manifest with snapshot lineage shared by the
   // lake retention keys (vacuum plan/apply + as-of read): one
@@ -735,38 +577,30 @@ object SparkEntry {
   // read by all three etl_entity_* keys (pairs feed the closure, the
   // closure feeds survivorship; rebuilding the chain per key would
   // re-pay the blocked join three times)
-  private val crmRecsCache =
-    new SessionCache[DataFrame]
   private def sharedCrmRecs(s: SparkSession, dir: String): DataFrame =
-    crmRecsCache.getOrElseUpdate((s, dir), primeTimed("crm_recs")(
+    shared("crm_recs", s, dir)(
       operators.EntityResolution.synthCrmCorpus(Tables.customer(s, dir))
-        .localCheckpoint(true)))
-  private val entityPairsCache =
-    new SessionCache[DataFrame]
+        .localCheckpoint(true))
   private def sharedEntityPairs(s: SparkSession, dir: String): DataFrame =
-    entityPairsCache.getOrElseUpdate((s, dir), primeTimed("entity_pairs")(
+    shared("entity_pairs", s, dir)(
       operators.EntityResolution.entityPairs(sharedCrmRecs(s, dir))
-        .localCheckpoint(true)))
-  private val entityGroupsCache =
-    new SessionCache[DataFrame]
+        .localCheckpoint(true))
   private def sharedEntityGroups(s: SparkSession, dir: String): DataFrame =
-    entityGroupsCache.getOrElseUpdate((s, dir), primeTimed("entity_groups")(
+    shared("entity_groups", s, dir)(
       operators.EntityResolution.entityGroups(sharedCrmRecs(s, dir),
-        sharedEntityPairs(s, dir)).localCheckpoint(true)))
+        sharedEntityPairs(s, dir)).localCheckpoint(true))
   // the HISTORY entity store (base k%7≠0 + pos feeds, resolved by
   // their own closure) the incremental/stream intake keys probe —
   // what yesterday's nightly batch would have persisted
-  private val entityStoreCache =
-    new SessionCache[DataFrame]
   private def sharedEntityHistStore(s: SparkSession, dir: String): DataFrame =
-    entityStoreCache.getOrElseUpdate((s, dir), primeTimed("entity_store") {
+    shared("entity_store", s, dir) {
       val hist = sharedCrmRecs(s, dir)
         .filter((col("rec_id") % 4).isin(0L, 2L) && col("rec_id") % 28 =!= 0)
       operators.EntityResolution.entityStore(hist,
         operators.EntityResolution.entityGroups(hist,
           operators.EntityResolution.entityPairs(hist)))
         .localCheckpoint(true)
-    })
+    }
   // the arriving delta: the web/legacy feeds plus brand-new base
   // records (k % 7 == 0 ⇔ rec_id % 28 == 0) with no history trace
   private def crmDelta(s: SparkSession, dir: String): DataFrame =

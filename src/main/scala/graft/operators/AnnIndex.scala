@@ -72,45 +72,32 @@ object AnnIndex {
       Duration.Inf)
   }
 
-  /** The broadcastable model state back from disk. */
-  /** Session-scoped MODEL-STATE memo (r19): a serving probe loads an
-    * index's centroids/codebooks once and keeps them — re-reading
-    * nlist rows of immutable model parquet per probe batch is a
-    * Spark job (file listing + scan + collect) paid for nothing.
-    * Keyed by (session, dir, directory stamp): the stamp folds every
-    * file's (name, length, mtime), so [[rebuildIvf]]'s in-place
-    * centroid rewrite — the one mutation of model files this layout
-    * has — misses the memo and reloads. Appends/deletes touch only
-    * `vectors`/`tombstones`, never the model dirs, so their hits are
-    * correct by construction. Stale entries for a rewritten dir are
-    * dropped on reload (same (session, dir) prefix), so the memo
-    * holds O(live indexes) driver-sized arrays, not history. */
-  private val modelCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), AnyRef]
-  private def dirStamp(spark: SparkSession, dir: String): Long = {
+  /** The broadcastable model state back from disk, memoized per
+    * (session, model dir) in [[graft.SessionMemo]]: a serving probe
+    * loads an index's centroids/codebooks once and keeps them —
+    * re-reading nlist rows of immutable model parquet per probe batch
+    * is a Spark job (file listing + scan + collect) paid for nothing.
+    * The entry is stamped with the directory's [[stampOf]], so
+    * [[rebuildIvf]]'s in-place centroid rewrite — the one mutation of
+    * model files this layout has — misses and REPLACES the entry.
+    * Appends/deletes touch only `vectors`/`tombstones`, never the
+    * model dirs, so their hits are correct by construction. */
+  private def cachedModel[T](spark: SparkSession, dir: String)(load: => T): T = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).foldLeft(0L) { (acc, st) =>
+    graft.SessionMemo(spark, dir, "ann_model", stampOf(fs.listStatus(p).toSeq))(load)
+  }
+
+  /** A directory's (name, length, mtime) fold, taken in NAME order:
+    * `listStatus` order is not contractual (a local filesystem
+    * returns readdir order), and an order-dependent stamp would turn
+    * an unchanged directory into a spurious reload. */
+  private[graft] def stampOf(statuses: Seq[org.apache.hadoop.fs.FileStatus]): Long =
+    statuses.sortBy(_.getPath.getName).foldLeft(0L) { (acc, st) =>
       var h = acc * 1000003L + st.getPath.getName.hashCode
       h = h * 1000003L + st.getLen
       h * 1000003L + st.getModificationTime
     }
-  }
-  private def cachedModel[T <: AnyRef](spark: SparkSession, dir: String)
-                                      (load: => T): T = {
-    val key = (spark, dir, dirStamp(spark, dir))
-    modelCache.get(key) match {
-      case Some(v) => v.asInstanceOf[T]
-      case None =>
-        val v = load
-        // drop superseded stamps of the same dir before inserting
-        modelCache.keys
-          .filter(k => k._1 == spark && k._2 == dir && k != key)
-          .foreach(modelCache.remove)
-        modelCache.putIfAbsent(key, v)
-        v
-    }
-  }
 
   def loadCentroids(spark: SparkSession, path: String): Array[Array[Float]] =
     cachedModel(spark, s"$path/centroids") {

@@ -122,4 +122,13 @@ class BenchSpec extends AnyFunSuite {
     assert(!Bench.midRunNoisy(Seq(26.0), Some(13.0)),
       "boundary is exclusive, matching the startup verdict")
   }
+
+  test("Json.str escapes quote, backslash and every control char, " +
+    "and a JSON reader gets the original string back") {
+    val raw = "a\"b\\c\nd\re\tf\u0001g"
+    val quoted = Json.str(raw)
+    assert(quoted === "\"a\\\"b\\\\c\\nd\\re\\tf\\u0001g\"")
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(quoted, classOf[String]) === raw)
+  }
 }

@@ -132,21 +132,21 @@ class R17PropertySpec extends SparkSpec {
     SparkEntry.queries("text_cms_token_freq")(spark, "/root/testdata/sf0.001")
     val churned = spark.newSession()
     SparkEntry.queries("text_cms_token_freq")(churned, "/root/testdata/sf0.001")
-    assert(SparkEntry.sessionCacheEntries(spark) > 0 &&
-      SparkEntry.sessionCacheEntries(churned) > 0,
+    assert(SessionMemo.entries(spark) > 0 &&
+      SessionMemo.entries(churned) > 0,
       "touching a cms key must populate its shared cache per session")
     // invoke the sweep the ApplicationEnd listener runs, DIRECTLY
     // (r18, ADVICE: posting a synthetic ApplicationEnd onto the
     // live bus also feeds Spark's own AppStatus/SQL listeners on a
     // context still in use — a corruption hazard for later suites)
-    SparkEntry.sessionCacheSweep(spark.sparkContext)
-    assert(SparkEntry.sessionCacheEntries(spark) === 0,
+    SessionMemo.sweep(spark.sparkContext)
+    assert(SessionMemo.entries(spark) === 0,
       "the context sweep must evict the suite session's entries")
-    assert(SparkEntry.sessionCacheEntries(churned) === 0,
+    assert(SessionMemo.entries(churned) === 0,
       "the context sweep must evict churned sessions' entries too")
     // and the caches keep working afterwards (rebuild on next touch)
     SparkEntry.queries("text_cms_token_freq")(spark, "/root/testdata/sf0.001")
-    assert(SparkEntry.sessionCacheEntries(spark) > 0,
+    assert(SessionMemo.entries(spark) > 0,
       "a swept cache must rebuild on the next touch, not wedge")
   }
 
@@ -174,7 +174,7 @@ class R17PropertySpec extends SparkSpec {
     // re-registered a DUPLICATE listener while the first stayed on
     // the bus — one extra listener per sweep+touch cycle
     (1 to 3).foreach { _ =>
-      SparkEntry.sessionCacheSweep(spark.sparkContext)
+      SessionMemo.sweep(spark.sparkContext)
       SparkEntry.queries("text_cms_token_freq")(spark, "/root/testdata/sf0.001")
     }
     assert(graftBusListeners.size === 1,
@@ -183,15 +183,15 @@ class R17PropertySpec extends SparkSpec {
     // drive the REAL registered listener object's callback (not the
     // bus, not the test hook): covers the wiring from registration
     // through onApplicationEnd to the sweep
-    assert(SparkEntry.sessionCacheEntries(spark) > 0)
+    assert(SessionMemo.entries(spark) > 0)
     val ev = org.apache.spark.scheduler.SparkListenerApplicationEnd(0L)
     graftBusListeners.foreach(l =>
       l.asInstanceOf[org.apache.spark.scheduler.SparkListener]
         .onApplicationEnd(ev))
-    assert(SparkEntry.sessionCacheEntries(spark) === 0,
+    assert(SessionMemo.entries(spark) === 0,
       "the registered listener's own onApplicationEnd must sweep")
     SparkEntry.queries("text_cms_token_freq")(spark, "/root/testdata/sf0.001")
-    assert(SparkEntry.sessionCacheEntries(spark) > 0,
+    assert(SessionMemo.entries(spark) > 0,
       "caches must rebuild after the listener-driven sweep")
   }
 

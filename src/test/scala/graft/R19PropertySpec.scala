@@ -84,4 +84,54 @@ class R19PropertySpec extends SparkSpec {
     assert(!(second eq first))
     assert(!second.zip(first).forall { case (a, b) => a.sameElements(b) })
   }
+
+  private def smallIndex(name: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    AnnIndex.buildIvf((0L until 64L).map(i =>
+      (i, Array.tabulate(8)(d => ((i * 7 + d) % 13).toFloat)))
+      .toDF("vec_id", "embedding"), dir, nlist = 4)
+    dir
+  }
+
+  test("annindex model memo is a SessionMemo entry: a load adds one, " +
+    "the context sweep clears it") {
+    val dir = smallIndex("memosweep")
+    SessionMemo.sweep(spark.sparkContext)
+    assert(SessionMemo.entries(spark) === 0)
+    AnnIndex.loadCentroids(spark, dir)
+    assert(SessionMemo.entries(spark) === 1,
+      "the centroids must be memoized in the one session memo")
+    SessionMemo.sweep(spark.sparkContext)
+    assert(SessionMemo.entries(spark) === 0,
+      "the context sweep must evict the model arrays too")
+  }
+
+  test("annindex dir stamp is independent of listing order") {
+    val statuses = Seq("part-00000.parquet", "_SUCCESS", ".part-00000.crc",
+      "part-00001.parquet").zipWithIndex.map { case (n, i) =>
+      new org.apache.hadoop.fs.FileStatus(100L + i, false, 1, 128L,
+        1000L * i, new org.apache.hadoop.fs.Path(s"/idx/centroids/$n"))
+    }
+    assert(AnnIndex.stampOf(statuses) === AnnIndex.stampOf(statuses.reverse))
+    val grown = statuses.updated(0, new org.apache.hadoop.fs.FileStatus(
+      999L, false, 1, 128L, 0L,
+      new org.apache.hadoop.fs.Path("/idx/centroids/part-00000.parquet")))
+    assert(AnnIndex.stampOf(grown) !== AnnIndex.stampOf(statuses),
+      "a changed file length must change the stamp")
+  }
+
+  test("annindex in-place rewrite replaces the model entry: one per " +
+    "(session, dir)") {
+    val dir = smallIndex("memoreplace")
+    val session = spark.newSession()
+    val first = AnnIndex.loadCentroids(session, dir)
+    assert(SessionMemo.entries(session) === 1)
+    AnnIndex.buildIvf((0L until 64L).map(i =>
+      (i, Array.tabulate(8)(d => ((i * 5 + d * 2) % 17).toFloat)))
+      .toDF("vec_id", "embedding"), dir, nlist = 4)
+    val second = AnnIndex.loadCentroids(session, dir)
+    assert(!(second eq first), "the rewrite must reload")
+    assert(SessionMemo.entries(session) === 1,
+      "the reload must replace the superseded entry, not add one")
+  }
 }
